@@ -428,7 +428,7 @@ def basket_rules(
     win regime too: k=64 is a statistical tie and k=256 loses again
     (0/2) — lambda interpretation scales with pair volume exactly
     like the self-join's probe side, so no k favors it on this
-    engine (tools/r14_basket_hof_big.py, SCALING §10a0e-hof). Kept
+    engine (SCALING §10a0e-hof). Kept
     as the recorded negative result.
     """
     if min_pair_count < 1:

@@ -2,22 +2,56 @@
 the batch operators are naturally incremental per key, so the engine
 exposes streaming variants).
 
-- :func:`replay_events_stream` — replays an events parquet directory as a
-  file stream (the standard backfill/replay harness; in production the
-  source would be Kafka/files landing continuously).
-- :func:`streaming_windowed_stats` — watermarked sliding-window mean/std
-  per user: the streaming analogue of the F3 rolling aggregates, with
-  late data beyond the watermark dropped (watermark-discard semantics —
-  the batch reference has no late-data concept).
-- :func:`streaming_zscore_flags` — stateful per-user anomaly flags via
-  ``applyInPandasWithState``: keeps the last N values per user and emits
-  a z-score flag per event — the exact rolling-zscore contract, online.
+Sources and native operators (Spark keeps any state in the JVM):
+
+- :func:`replay_table_stream`, :func:`replay_events_stream` — replay a
+  testdata table as a bounded file stream (the standard backfill/replay
+  harness; in production the source would be Kafka/files landing
+  continuously).
+- :func:`streaming_windowed_stats`, :func:`sessionized_stats` —
+  watermarked sliding and session windows, late data beyond the
+  watermark dropped (watermark-discard semantics — the batch reference
+  has no late-data concept).
+- :func:`streaming_dedup`, :func:`streaming_enrich`,
+  :func:`streaming_hist` — dedup within the watermark, stream-static
+  broadcast join, additive histogram sketch.
+
+Keyed-state twins, one per batch detector or walk: z-score,
+Page-Hinkley, EWMA, Hampel, trend OLS, Kalman, episode ids, ADWIN, GK
+quantiles, alert throttling, KMV, Theta, Croston, transitions,
+attribution, funnel, journey paths and SAX here, plus
+``streaming.sequences.streaming_sequences``. Each twin supplies only
+its output and state schemas, its initial state, its sort columns and
+a ``scan(key, state, cols) -> (state, rows)`` recurrence. The private
+driver :func:`_keyed_scan` runs every one of them on
+``applyInPandasWithState`` under one contract:
+
+- **Order.** All Arrow chunks of a key's micro-batch are concatenated
+  and stable-sorted once on the twin's order columns, so a key with
+  more rows than ``spark.sql.execution.arrow.maxRecordsPerBatch`` is
+  scanned in the same order as a small one. Across micro-batches the
+  order is arrival order: the replay-parity claims are for in-order
+  (time-split) replay.
+- **NULL -> None.** ``cols`` maps every input column to a plain Python
+  list, with SQL NULL as ``None``. Arrow hands a null double to pandas
+  as NaN; the driver turns it back, so a NaN value arrives as ``None``
+  too. Plain lists, not numpy, keep the Python-int arithmetic of the
+  integer-unit twins (Page-Hinkley, trend OLS, SAX) bit-equal to batch.
+- **Eviction.** With ``timeout_minutes`` set, a key idle that long in
+  processing time is evicted: its state is removed and nothing is
+  emitted. Every other call saves the new state and re-arms the
+  timeout. ``timeout_minutes=None`` keeps state for the query's life.
+- **Watermark.** Fixed at 2 hours on the twin's timestamp column. It
+  sets the query's event-time watermark but drops nothing here: Spark
+  filters late rows out of this operator only under event-time
+  timeouts, which no twin uses, so a late row is still scanned (in
+  arrival order, after the rows it should have preceded).
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -146,6 +180,101 @@ def sessionized_stats(
     )
 
 
+def _ddl(df: DataFrame, cols: Sequence[str]) -> str:
+    """``name type, ...`` DDL of ``df``'s columns ``cols``: the key and
+    order portions of a twin's schemas follow its input's types."""
+    return ", ".join(
+        f"{f.name} {f.dataType.simpleString()}"
+        for f in df.select(*cols).schema.fields
+    )
+
+
+def _ddl_names(ddl: str) -> list[str]:
+    """Top-level field names of a ``name type, ...`` DDL string (commas
+    inside ``<...>`` or ``(...)`` belong to a type)."""
+    names, depth, field = [], 0, ""
+    for ch in ddl + ",":
+        depth += (ch in "<(") - (ch in ">)")
+        if ch == "," and depth == 0:
+            names.append(field.split()[0])
+            field = ""
+        else:
+            field += ch
+    return names
+
+
+def _keyed_scan(
+    df: DataFrame,
+    keys: Sequence[str],
+    out_schema: str,
+    state_schema: str,
+    init: tuple,
+    order: Sequence[str],
+    scan: Callable[[tuple, tuple, dict[str, list]], tuple[tuple, list[tuple]]],
+    timeout_minutes: int | None,
+    ts_col: str = "ts",
+) -> DataFrame:
+    """Run ``scan`` per key of ``df`` as one stateful streaming operator
+    — the driver under every keyed-state twin (contract in the module
+    docstring: order, NULL -> None, eviction, 2-hour watermark).
+
+    ``scan(key, state, cols)`` receives the grouping-key tuple, the
+    key's state tuple (``init`` for a new key) and the key's whole
+    micro-batch as ``{column: list}``, stable-sorted on ``order`` (left
+    in arrival order when ``order`` is empty). It returns the new state
+    tuple, matching ``state_schema``, and the output rows as tuples in
+    ``out_schema`` column order.
+    """
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    order = list(order)
+    out_cols = _ddl_names(out_schema)
+
+    def handler(key, chunks, state):
+        import pandas as pd
+
+        # ProcessingTimeTimeout fired for an idle key: evict its state
+        # and emit nothing. Without this, the handler would re-save the
+        # state and re-arm the timeout, so per-key state would never be
+        # evicted (unbounded with key cardinality).
+        if state.hasTimedOut:
+            state.remove()
+            return
+        pdf = pd.concat(list(chunks), ignore_index=True)
+        if order:
+            pdf = pdf.sort_values(order, kind="mergesort")
+        cols = {}
+        for c in pdf.columns:
+            vals = pdf[c].tolist()
+            if pdf[c].hasnans:
+                vals = [
+                    None if na else v
+                    for v, na in zip(vals, pdf[c].isna().tolist())
+                ]
+            cols[c] = vals
+        new_state, rows = scan(key, state.get if state.exists else init, cols)
+        state.update(new_state)
+        if timeout_minutes is not None:
+            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
+        yield pd.DataFrame(rows, columns=out_cols)
+
+    return (
+        df.withWatermark(ts_col, "2 hours")
+        .groupBy(*keys)
+        .applyInPandasWithState(
+            handler,
+            outputStructType=out_schema,
+            stateStructType=state_schema,
+            outputMode="append",
+            timeoutConf=(
+                GroupStateTimeout.ProcessingTimeTimeout
+                if timeout_minutes is not None
+                else GroupStateTimeout.NoTimeout
+            ),
+        )
+    )
+
+
 def streaming_zscore_flags(
     events: DataFrame,
     window_rows: int = 24,
@@ -157,81 +286,40 @@ def streaming_zscore_flags(
     State = the last ``window_rows`` values per user (a bounded deque);
     each incoming batch is scored against the state *then* appended —
     reproducing the batch past-only frame [t-w, t-1] when events arrive
-    in order. The Arrow-batched ``applyInPandasWithState`` keeps Python
-    work vectorized per key-batch.
+    in order. A NULL value keeps its place in the deque, as a NULL row
+    keeps its place in the batch row frame: the mean and std skip it,
+    and its own score is NULL (flag 0).
     """
-    import pandas as pd  # noqa: F401 (used inside the state fn)
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    import math
 
-    out_schema = (
-        "user_id bigint, event_id bigint, ts timestamp, value double, "
-        "zscore double, is_anomaly int"
-    )
-    state_schema = "values array<double>"
-
-    def score(key, pdf_iter, state):
-        import math
-
-        import pandas as pd
-
-        # ProcessingTimeTimeout fired for an idle key: evict its state
-        # and emit nothing. Without this, the handler would run on the
-        # empty iterator, re-save the state and re-arm the timeout, so
-        # per-key state would never be evicted (unbounded with key
-        # cardinality).
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        (user_id,) = key
-        buf = list(state.get[0]) if state.exists else []
+    def scan(key, state, cols):
+        buf = list(state[0])
         rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for _, r in pdf.iterrows():
-                hist = buf[-window_rows:]
-                n = len(hist)
-                if n >= 2:
-                    mu = sum(hist) / n
-                    var = sum((x - mu) ** 2 for x in hist) / (n - 1)
-                    sd = math.sqrt(var)
-                    z = (r["value"] - mu) / sd if sd > 0 else None
-                else:
-                    z = None
-                rows.append(
-                    (
-                        user_id,
-                        int(r["event_id"]),
-                        r["ts"],
-                        float(r["value"]) if r["value"] is not None else None,
-                        z,
-                        int(z is not None and abs(z) > threshold),
-                    )
-                )
-                if r["value"] is not None:
-                    buf.append(float(r["value"]))
-        state.update((buf[-window_rows:],))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            rows,
-            columns=["user_id", "event_id", "ts", "value", "zscore", "is_anomaly"],
-        )
+        for eid, ts, v in zip(cols["event_id"], cols["ts"], cols["value"]):
+            hist = [x for x in buf[-window_rows:] if x is not None]
+            n = len(hist)
+            z = None
+            if n >= 2 and v is not None:
+                mu = sum(hist) / n
+                var = sum((x - mu) ** 2 for x in hist) / (n - 1)
+                sd = math.sqrt(var)
+                z = (v - mu) / sd if sd > 0 else None
+            rows.append(
+                (key[0], eid, ts, v, z, int(z is not None and abs(z) > threshold))
+            )
+            buf.append(v)
+        return (buf[-window_rows:],), rows
 
-    return (
-        events.withWatermark("ts", "2 hours")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            score,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
+    return _keyed_scan(
+        events,
+        ["user_id"],
+        "user_id bigint, event_id bigint, ts timestamp, value double, "
+        "zscore double, is_anomaly int",
+        "values array<double>",
+        ([],),
+        ["ts", "event_id"],
+        scan,
+        timeout_minutes,
     )
 
 
@@ -255,85 +343,45 @@ def streaming_page_hinkley(
     Python ints are arbitrary-precision, so the running sums cannot
     overflow the state's bigint before the batch side would.
     """
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     scale = 10**unit_digits
     delta_i = int(round(delta * scale))
     lam_i = int(round(lam * scale))
-    out_schema = (
-        "user_id bigint, event_id bigint, ts timestamp, value double, "
-        "ph_inc double, ph_dec double, ph_alarm int"
-    )
-    state_schema = "n bigint, s bigint, u bigint, minu bigint, d bigint, maxd bigint"
 
-    def detect(key, pdf_iter, state):
-        import pandas as pd
-
-        # idle-key timeout: evict state, emit nothing (see score()).
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        (user_id,) = key
-        n, s, u, minu, d, maxd = (
-            state.get if state.exists else (0, 0, 0, 0, 0, 0)
-        )
+    def scan(key, state, cols):
+        n, s, u, minu, d, maxd = state
         rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for _, r in pdf.iterrows():
-                m = int(round(float(r["value"]) * scale))
-                n += 1
-                s += m
-                # Python // floors toward -inf — identical to the batch
-                # side's F.floor((2S+n)/(2n)) for any sign of S
-                xbar = (2 * s + n) // (2 * n)
-                dev = m - xbar
-                u += dev - delta_i
-                d += dev + delta_i
-                if n == 1:
-                    minu, maxd = u, d
-                else:
-                    minu = min(minu, u)
-                    maxd = max(maxd, d)
-                inc, dec = u - minu, maxd - d
-                rows.append(
-                    (
-                        user_id,
-                        int(r["event_id"]),
-                        r["ts"],
-                        float(r["value"]),
-                        inc / scale,
-                        dec / scale,
-                        int(inc > lam_i or dec > lam_i),
-                    )
-                )
-        state.update((n, s, u, minu, d, maxd))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "user_id", "event_id", "ts", "value",
-                "ph_inc", "ph_dec", "ph_alarm",
-            ],
-        )
+        for eid, ts, v in zip(cols["event_id"], cols["ts"], cols["value"]):
+            m = int(round(float(v) * scale))
+            n += 1
+            s += m
+            # Python // floors toward -inf — identical to the batch
+            # side's F.floor((2S+n)/(2n)) for any sign of S
+            xbar = (2 * s + n) // (2 * n)
+            dev = m - xbar
+            u += dev - delta_i
+            d += dev + delta_i
+            if n == 1:
+                minu, maxd = u, d
+            else:
+                minu = min(minu, u)
+                maxd = max(maxd, d)
+            inc, dec = u - minu, maxd - d
+            rows.append(
+                (key[0], eid, ts, float(v), inc / scale, dec / scale,
+                 int(inc > lam_i or dec > lam_i))
+            )
+        return (n, s, u, minu, d, maxd), rows
 
-    return (
-        events.withWatermark("ts", "2 hours")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            detect,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
+    return _keyed_scan(
+        events,
+        ["user_id"],
+        "user_id bigint, event_id bigint, ts timestamp, value double, "
+        "ph_inc double, ph_dec double, ph_alarm int",
+        "n bigint, s bigint, u bigint, minu bigint, d bigint, maxd bigint",
+        (0, 0, 0, 0, 0, 0),
+        ["ts", "event_id"],
+        scan,
+        timeout_minutes,
     )
 
 
@@ -356,90 +404,58 @@ def streaming_ewma_deviation(
     sum accumulates most-recent-first with the same ``(1-alpha)^lag``
     literals as the batch flat-codegen form, so parity holds to float
     summation order (replay-asserted at rel 1e-6, the z-score twin's
-    contract).
+    contract). A NULL value keeps its lag position, as in the batch
+    frame: it adds no weight to the EWMA and no term to the std.
     """
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    import math
 
-    out_schema = (
-        "user_id bigint, event_id bigint, ts timestamp, value double, "
-        "ewma double, ewma_dev double, ewma_alarm int"
-    )
-    state_schema = "values array<double>"
-
-    def score(key, pdf_iter, state):
-        import math
-
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        (user_id,) = key
-        buf = list(state.get[0]) if state.exists else []
+    def scan(key, state, cols):
+        buf = list(state[0])
         rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for _, r in pdf.iterrows():
-                hist = buf[-window_rows:]
-                n = len(hist)
-                num = den = 0.0
-                for j, x in enumerate(reversed(hist), start=1):
+        for eid, ts, v in zip(cols["event_id"], cols["ts"], cols["value"]):
+            hist = buf[-window_rows:]
+            num = den = 0.0
+            for j, x in enumerate(reversed(hist), start=1):
+                if x is not None:
                     wt = (1.0 - alpha) ** (j - 1)
                     num += x * wt
                     den += wt
-                ewma = num / den if den > 0 else None
-                if n >= 2:
-                    mu = sum(hist) / n
-                    var = sum((x - mu) ** 2 for x in hist) / (n - 1)
-                    rstd = math.sqrt(var)
-                else:
-                    rstd = None
-                v = float(r["value"]) if r["value"] is not None else None
-                # batch contract: ewma_dev is the rstd-NORMALIZED
-                # deviation, NULL when no ewma or zero/undefined spread
-                dev = (
-                    (v - ewma) / rstd
-                    if (
-                        v is not None
-                        and ewma is not None
-                        and rstd is not None
-                        and rstd != 0.0
-                    )
-                    else None
+            ewma = num / den if den > 0 else None
+            vals = [x for x in hist if x is not None]
+            n = len(vals)
+            if n >= 2:
+                mu = sum(vals) / n
+                var = sum((x - mu) ** 2 for x in vals) / (n - 1)
+                rstd = math.sqrt(var)
+            else:
+                rstd = None
+            # batch contract: ewma_dev is the rstd-NORMALIZED
+            # deviation, NULL when no ewma or zero/undefined spread
+            dev = (
+                (v - ewma) / rstd
+                if (
+                    v is not None
+                    and ewma is not None
+                    and rstd is not None
+                    and rstd != 0.0
                 )
-                alarm = int(dev is not None and abs(dev) > threshold)
-                rows.append(
-                    (user_id, int(r["event_id"]), r["ts"], v, ewma, dev, alarm)
-                )
-                if v is not None:
-                    buf.append(v)
-        state.update((buf[-window_rows:],))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "user_id", "event_id", "ts", "value",
-                "ewma", "ewma_dev", "ewma_alarm",
-            ],
-        )
+                else None
+            )
+            alarm = int(dev is not None and abs(dev) > threshold)
+            rows.append((key[0], eid, ts, v, ewma, dev, alarm))
+            buf.append(v)
+        return (buf[-window_rows:],), rows
 
-    return (
-        events.withWatermark("ts", "2 hours")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            score,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
+    return _keyed_scan(
+        events,
+        ["user_id"],
+        "user_id bigint, event_id bigint, ts timestamp, value double, "
+        "ewma double, ewma_dev double, ewma_alarm int",
+        "values array<double>",
+        ([],),
+        ["ts", "event_id"],
+        scan,
+        timeout_minutes,
     )
 
 
@@ -458,80 +474,47 @@ def streaming_hampel_flags(
     against the previous ``window_rows`` values' exact interpolated
     median/MAD (identical formulas to the batch operator, so replay
     parity is exact — order statistics, nothing accumulates), then
-    appended.
+    appended. A NULL value keeps its place in the window and is left
+    out of the median, as in the batch row frame.
     """
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    out_schema = (
-        "user_id bigint, event_id bigint, ts timestamp, value double, "
-        "hampel_median double, hampel_mad double, hampel_flag int"
-    )
-    state_schema = "values array<double>"
+    def med(sorted_vals):
+        m = len(sorted_vals)
+        return (
+            sorted_vals[(m + 1) // 2 - 1] + sorted_vals[(m + 2) // 2 - 1]
+        ) / 2.0
 
-    def score(key, pdf_iter, state):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        def med(sorted_vals):
-            m = len(sorted_vals)
-            return (
-                sorted_vals[(m + 1) // 2 - 1] + sorted_vals[(m + 2) // 2 - 1]
-            ) / 2.0
-
-        (user_id,) = key
-        buf = list(state.get[0]) if state.exists else []
+    def scan(key, state, cols):
+        buf = list(state[0])
         rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for _, r in pdf.iterrows():
-                hist = buf[-window_rows:]
-                v = float(r["value"]) if r["value"] is not None else None
-                if hist:
-                    m = med(sorted(hist))
-                    mad = med(sorted(abs(x - m) for x in hist))
-                    if v is None:
-                        flag = 0
-                    elif mad == 0.0:
-                        flag = int(v != m)
-                    else:
-                        flag = int(abs(v - m) > k * 1.4826 * mad)
-                else:
-                    m = mad = None
+        for eid, ts, v in zip(cols["event_id"], cols["ts"], cols["value"]):
+            hist = [x for x in buf[-window_rows:] if x is not None]
+            if hist:
+                m = med(sorted(hist))
+                mad = med(sorted(abs(x - m) for x in hist))
+                if v is None:
                     flag = 0
-                rows.append(
-                    (user_id, int(r["event_id"]), r["ts"], v, m, mad, flag)
-                )
-                if v is not None:
-                    buf.append(v)
-        state.update((buf[-window_rows:],))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "user_id", "event_id", "ts", "value",
-                "hampel_median", "hampel_mad", "hampel_flag",
-            ],
-        )
+                elif mad == 0.0:
+                    flag = int(v != m)
+                else:
+                    flag = int(abs(v - m) > k * 1.4826 * mad)
+            else:
+                m = mad = None
+                flag = 0
+            rows.append((key[0], eid, ts, v, m, mad, flag))
+            buf.append(v)
+        return (buf[-window_rows:],), rows
 
-    return (
-        events.withWatermark("ts", "2 hours")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            score,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
+    return _keyed_scan(
+        events,
+        ["user_id"],
+        "user_id bigint, event_id bigint, ts timestamp, value double, "
+        "hampel_median double, hampel_mad double, hampel_flag int",
+        "values array<double>",
+        ([],),
+        ["ts", "event_id"],
+        scan,
+        timeout_minutes,
     )
 
 
@@ -558,109 +541,59 @@ def streaming_trend_ols(
     arbitrary-precision, so the sums cannot overflow before the batch
     side's BIGINT would.
     """
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    import math
 
     scale = 10**unit_digits
-    out_schema = (
+
+    def scan(key, state, cols):
+        rn, n_i, sx_i, sy_i, sxx_i, sxy_i, syy_i = state
+        rows = []
+        for eid, ts, v in zip(cols["event_id"], cols["ts"], cols["value"]):
+            x = rn  # 0-based row index, null y rows included
+            m = int(round(v * scale)) if v is not None else None
+            # score vs the PAST fit — same IEEE expression order as
+            # the batch columns (floats from the same exact ints)
+            slope = fit = z = alarm = None
+            n = float(n_i)
+            sx, sy = float(sx_i), float(sy_i)
+            sxx, sxy, syy = float(sxx_i), float(sxy_i), float(syy_i)
+            vx = n * sxx - sx * sx
+            if n >= min_points and vx > 0:
+                b = (n * sxy - sx * sy) / vx
+                a = (sy - b * sx) / n
+                sse = max(
+                    0.0, syy - sy * sy / n - b * b * (sxx - sx * sx / n)
+                )
+                s = math.sqrt(sse / (n - 2)) if n > 2 else None
+                fit_i = a + b * float(x)
+                slope = b / scale
+                fit = fit_i / scale
+                if m is not None and s is not None and s != 0.0:
+                    z = (float(m) - fit_i) / s
+                    alarm = int(abs(z) > threshold)
+            rows.append((key[0], eid, ts, v, slope, fit, z, alarm))
+            rn += 1
+            if m is not None:
+                n_i += 1
+                sx_i += x
+                sy_i += m
+                sxx_i += x * x
+                sxy_i += x * m
+                syy_i += m * m
+        return (rn, n_i, sx_i, sy_i, sxx_i, sxy_i, syy_i), rows
+
+    return _keyed_scan(
+        events,
+        ["user_id"],
         "user_id bigint, event_id bigint, ts timestamp, value double, "
         "trend_run_slope double, trend_run_fit double, "
-        "trend_run_z double, trend_run_alarm int"
-    )
-    state_schema = (
+        "trend_run_z double, trend_run_alarm int",
         "rn bigint, n bigint, sx bigint, sy bigint, "
-        "sxx bigint, sxy bigint, syy bigint"
-    )
-
-    def detect(key, pdf_iter, state):
-        import math
-
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        (user_id,) = key
-        rn, n_i, sx_i, sy_i, sxx_i, sxy_i, syy_i = (
-            state.get if state.exists else (0, 0, 0, 0, 0, 0, 0)
-        )
-        rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for _, r in pdf.iterrows():
-                x = rn  # 0-based row index, null y rows included
-                y_raw = r["value"]
-                y_ok = y_raw is not None and not (
-                    isinstance(y_raw, float) and math.isnan(y_raw)
-                )
-                m = int(round(float(y_raw) * scale)) if y_ok else None
-                # score vs the PAST fit — same IEEE expression order as
-                # the batch columns (floats from the same exact ints)
-                slope = fit = z = alarm = None
-                n = float(n_i)
-                sx, sy = float(sx_i), float(sy_i)
-                sxx, sxy, syy = float(sxx_i), float(sxy_i), float(syy_i)
-                vx = n * sxx - sx * sx
-                if n >= min_points and vx > 0:
-                    b = (n * sxy - sx * sy) / vx
-                    a = (sy - b * sx) / n
-                    sse = max(
-                        0.0, syy - sy * sy / n - b * b * (sxx - sx * sx / n)
-                    )
-                    s = math.sqrt(sse / (n - 2)) if n > 2 else None
-                    fit_i = a + b * float(x)
-                    slope = b / scale
-                    fit = fit_i / scale
-                    if m is not None and s is not None and s != 0.0:
-                        z = (float(m) - fit_i) / s
-                        alarm = int(abs(z) > threshold)
-                rows.append(
-                    (
-                        user_id,
-                        int(r["event_id"]),
-                        r["ts"],
-                        float(y_raw) if y_ok else None,
-                        slope,
-                        fit,
-                        z,
-                        alarm,
-                    )
-                )
-                rn += 1
-                if m is not None:
-                    n_i += 1
-                    sx_i += x
-                    sy_i += m
-                    sxx_i += x * x
-                    sxy_i += x * m
-                    syy_i += m * m
-        state.update((rn, n_i, sx_i, sy_i, sxx_i, sxy_i, syy_i))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "user_id", "event_id", "ts", "value",
-                "trend_run_slope", "trend_run_fit",
-                "trend_run_z", "trend_run_alarm",
-            ],
-        )
-
-    return (
-        events.withWatermark("ts", "2 hours")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            detect,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
+        "sxx bigint, sxy bigint, syy bigint",
+        (0, 0, 0, 0, 0, 0, 0),
+        ["ts", "event_id"],
+        scan,
+        timeout_minutes,
     )
 
 
@@ -685,10 +618,10 @@ def streaming_kalman_level(
     Both sides execute the identical IEEE expression sequence
     (predict, innovate, gain, update), so the stream equals the batch
     operator BIT-FOR-BIT on in-order replay — asserted exactly in the
-    parity test.
+    parity test. Input contract matches the batch operator: a
+    null-free series; a NULL value raises ``ValueError``.
     """
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    import math
 
     if q_var is None or r_var is None:
         raise ValueError(
@@ -697,80 +630,44 @@ def streaming_kalman_level(
         )
     Q, R = float(q_var), float(r_var)
     thr = float(threshold)
-    out_schema = (
+
+    def scan(key, state, cols):
+        a, P = state  # (None, None) until the key's first value
+        rows = []
+        for eid, ts, y in zip(cols["event_id"], cols["ts"], cols["value"]):
+            if y is None:
+                raise ValueError(
+                    "streaming_kalman_level: null values in series (fill first)"
+                )
+            if a is None:
+                a, P = y, R
+                rows.append((key[0], eid, ts, y, None, a, None, None, None))
+                continue
+            a_pred = a
+            p_pred = P + Q
+            F_t = p_pred + R
+            v = y - a_pred
+            K = p_pred / F_t
+            a = a_pred + K * v
+            P = (1.0 - K) * p_pred
+            sd = math.sqrt(F_t)
+            score = v / sd
+            rows.append(
+                (key[0], eid, ts, y, a_pred, a, sd, score, abs(score) > thr)
+            )
+        return (a, P), rows
+
+    return _keyed_scan(
+        events,
+        ["user_id"],
         "user_id bigint, event_id bigint, ts timestamp, value double, "
         "kf_pred double, kf_level double, kf_innov_sd double, "
-        "kf_score double, kf_flag boolean"
-    )
-    state_schema = "level double, var double"
-
-    def filt(key, pdf_iter, state):
-        import math
-
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        (user_id,) = key
-        if state.exists:
-            a, P = state.get
-            have = True
-        else:
-            a, P = 0.0, 0.0
-            have = False
-        rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for _, r in pdf.iterrows():
-                y = float(r["value"])
-                if not have:
-                    a, P = y, R
-                    have = True
-                    rows.append(
-                        (user_id, int(r["event_id"]), r["ts"], y,
-                         None, a, None, None, None)
-                    )
-                    continue
-                a_pred = a
-                p_pred = P + Q
-                F_t = p_pred + R
-                v = y - a_pred
-                K = p_pred / F_t
-                a = a_pred + K * v
-                P = (1.0 - K) * p_pred
-                sd = math.sqrt(F_t)
-                score = v / sd
-                rows.append(
-                    (user_id, int(r["event_id"]), r["ts"], y,
-                     a_pred, a, sd, score, abs(score) > thr)
-                )
-        state.update((a, P))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "user_id", "event_id", "ts", "value",
-                "kf_pred", "kf_level", "kf_innov_sd", "kf_score", "kf_flag",
-            ],
-        )
-
-    return (
-        events.withWatermark("ts", "2 hours")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            filt,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
+        "kf_score double, kf_flag boolean",
+        "level double, var double",
+        (None, None),
+        ["ts", "event_id"],
+        scan,
+        timeout_minutes,
     )
 
 
@@ -793,68 +690,39 @@ def streaming_episode_assign(
     test). Non-alert rows pass through with a null episode_id and do
     not touch the gap clock.
     """
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     gap_us = int(round(float(gap_seconds) * 1_000_000))
-    out_schema = (
-        "user_id bigint, event_id bigint, ts timestamp, value double, "
-        f"{flag_col} int, episode_id bigint"
-    )
-    state_schema = "last_us long, counter long"
 
-    def assign(key, pdf_iter, state):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        (user_id,) = key
+    def scan(key, state, cols):
         # last_us = -1 is the "no alert seen yet" sentinel (a typed
         # state column cannot hold null)
-        last_us, counter = state.get if state.exists else (-1, 0)
+        last_us, counter = state
         rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for _, r in pdf.iterrows():
-                flag = r[flag_col]
-                v = float(r["value"]) if r["value"] is not None else None
-                if flag is None or int(flag) == 0:
-                    rows.append(
-                        (user_id, int(r["event_id"]), r["ts"], v,
-                         int(flag) if flag is not None else None, None)
-                    )
-                    continue
-                t_us = int(pd.Timestamp(r["ts"]).value // 1000)
-                if last_us < 0 or t_us - last_us > gap_us:
-                    counter += 1
-                last_us = t_us
+        for eid, ts, v, flag in zip(
+            cols["event_id"], cols["ts"], cols["value"], cols[flag_col]
+        ):
+            if flag is None or int(flag) == 0:
                 rows.append(
-                    (user_id, int(r["event_id"]), r["ts"], v, int(flag), counter)
+                    (key[0], eid, ts, v,
+                     int(flag) if flag is not None else None, None)
                 )
-        state.update((last_us, counter))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            rows,
-            columns=["user_id", "event_id", "ts", "value", flag_col, "episode_id"],
-        )
+                continue
+            t_us = ts.value // 1000
+            if last_us < 0 or t_us - last_us > gap_us:
+                counter += 1
+            last_us = t_us
+            rows.append((key[0], eid, ts, v, int(flag), counter))
+        return (last_us, counter), rows
 
-    return (
-        events.withWatermark("ts", "2 hours")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            assign,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
+    return _keyed_scan(
+        events,
+        ["user_id"],
+        "user_id bigint, event_id bigint, ts timestamp, value double, "
+        f"{flag_col} int, episode_id bigint",
+        "last_us long, counter long",
+        (-1, 0),
+        ["ts", "event_id"],
+        scan,
+        timeout_minutes,
     )
 
 
@@ -870,66 +738,35 @@ def streaming_adwin(
     histogram (O(max_buckets * log n) bucket (sum, count) pairs), and
     both sides run the SAME ``AdwinState`` code path over losslessly
     round-tripped float64/int64 arrays, so replay equals the batch
-    operator BIT-for-bit (asserted exactly in the parity test).
+    operator BIT-for-bit (asserted exactly in the parity test). As in
+    batch, a NULL value raises ``ValueError``.
     """
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from ..operators.adwin import AdwinState
 
-    out_schema = (
-        "user_id bigint, event_id bigint, ts timestamp, value double, "
-        "adwin_n bigint, adwin_mean double, adwin_change boolean"
-    )
-    state_schema = "sums array<double>, sqs array<double>, counts array<long>"
-
-    def run(key, pdf_iter, state):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        (user_id,) = key
-        if state.exists:
-            sums, sqs, counts = state.get
-            st = AdwinState(delta=delta, max_buckets=max_buckets,
-                            sums=sums, sqs=sqs, counts=counts)
-        else:
-            st = AdwinState(delta=delta, max_buckets=max_buckets)
+    def scan(key, state, cols):
+        sums, sqs, counts = state
+        st = AdwinState(delta=delta, max_buckets=max_buckets,
+                        sums=sums, sqs=sqs, counts=counts)
         rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for _, r in pdf.iterrows():
-                v = float(r["value"])
-                changed = st.add(v)
-                rows.append(
-                    (user_id, int(r["event_id"]), r["ts"], v,
-                     st.n, st.mean(), changed)
+        for eid, ts, v in zip(cols["event_id"], cols["ts"], cols["value"]):
+            if v is None:
+                raise ValueError(
+                    "streaming_adwin: null values in series (fill first)"
                 )
-        state.update((list(st.sums), list(st.sqs), list(st.counts)))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            rows,
-            columns=["user_id", "event_id", "ts", "value",
-                     "adwin_n", "adwin_mean", "adwin_change"],
-        )
+            changed = st.add(v)
+            rows.append((key[0], eid, ts, v, st.n, st.mean(), changed))
+        return (list(st.sums), list(st.sqs), list(st.counts)), rows
 
-    return (
-        events.withWatermark("ts", "2 hours")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            run,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
+    return _keyed_scan(
+        events,
+        ["user_id"],
+        "user_id bigint, event_id bigint, ts timestamp, value double, "
+        "adwin_n bigint, adwin_mean double, adwin_change boolean",
+        "sums array<double>, sqs array<double>, counts array<long>",
+        ([], [], []),
+        ["ts", "event_id"],
+        scan,
+        timeout_minutes,
     )
 
 
@@ -947,63 +784,31 @@ def streaming_quantiles(
     the sketch's tuple arrays, O((1/eps) log(eps n)) per key with the
     paper's rank-error guarantee (asserted against exact quantiles on
     replay in the parity test)."""
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from ..operators.gk import GKSketch
 
     qs = [float(q) for q in quantiles]
     qcols = [f"q{str(q).replace('.', '_')}" for q in qs]
-    out_schema = (
-        "user_id bigint, event_id bigint, ts timestamp, value double, "
-        + ", ".join(f"{c} double" for c in qcols)
-    )
-    state_schema = "vs array<double>, gs array<long>, ds array<long>, n long"
 
-    def run(key, pdf_iter, state):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        (user_id,) = key
-        if state.exists:
-            vs, gs, ds, n = state.get
-            sk = GKSketch(eps=eps, vs=vs, gs=gs, ds=ds, n=n)
-        else:
-            sk = GKSketch(eps=eps)
+    def scan(key, state, cols):
+        vs, gs, ds, n = state
+        sk = GKSketch(eps=eps, vs=vs, gs=gs, ds=ds, n=n)
         rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for _, r in pdf.iterrows():
-                v = float(r["value"])
-                sk.insert(v)
-                rows.append(
-                    (user_id, int(r["event_id"]), r["ts"], v,
-                     *[sk.query(q) for q in qs])
-                )
-        state.update((list(sk.vs), list(sk.gs), list(sk.ds), sk.n))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            rows, columns=["user_id", "event_id", "ts", "value", *qcols]
-        )
+        for eid, ts, v in zip(cols["event_id"], cols["ts"], cols["value"]):
+            v = float(v)
+            sk.insert(v)
+            rows.append((key[0], eid, ts, v, *[sk.query(q) for q in qs]))
+        return (list(sk.vs), list(sk.gs), list(sk.ds), sk.n), rows
 
-    return (
-        events.withWatermark("ts", "2 hours")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            run,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
+    return _keyed_scan(
+        events,
+        ["user_id"],
+        "user_id bigint, event_id bigint, ts timestamp, value double, "
+        + ", ".join(f"{c} double" for c in qcols),
+        "vs array<double>, gs array<long>, ds array<long>, n long",
+        ([], [], [], 0),
+        ["ts", "event_id"],
+        scan,
+        timeout_minutes,
     )
 
 
@@ -1028,79 +833,43 @@ def streaming_throttle_alerts(
     Input: a scored stream carrying ``user_id, event_id, ts`` and the
     flag column. Output: same grain plus ``alert_delivered``.
     """
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     if policy not in ("quiet-period", "fixed-cooldown"):
         raise ValueError(
             f"streaming_throttle_alerts: unknown policy {policy!r}"
         )
-    out_schema = (
-        "user_id bigint, event_id bigint, ts timestamp, "
-        f"{flag_col} int, alert_delivered int"
-    )
-    state_schema = "last_alert double, last_delivered double"
 
-    def throttle(key, pdf_iter, state):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        (user_id,) = key
-        last_alert, last_delivered = (
-            state.get if state.exists else (None, None)
-        )
+    def scan(key, state, cols):
+        last_alert, last_delivered = state
         rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for _, r in pdf.iterrows():
-                flag = int(r[flag_col]) if r[flag_col] is not None else 0
-                delivered = 0
-                if flag == 1:
-                    t = r["ts"].timestamp()
-                    if policy == "quiet-period":
-                        if last_alert is None or t - last_alert > cooldown_seconds:
-                            delivered = 1
-                        last_alert = t
-                    else:
-                        if (
-                            last_delivered is None
-                            or t - last_delivered > cooldown_seconds
-                        ):
-                            delivered = 1
-                            last_delivered = t
-                rows.append(
-                    (user_id, int(r["event_id"]), r["ts"], flag, delivered)
-                )
-        state.update(
-            (
-                float(last_alert) if last_alert is not None else None,
-                float(last_delivered) if last_delivered is not None else None,
-            )
-        )
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            rows,
-            columns=["user_id", "event_id", "ts", flag_col, "alert_delivered"],
-        )
+        for eid, ts, flag in zip(cols["event_id"], cols["ts"], cols[flag_col]):
+            flag = int(flag) if flag is not None else 0
+            delivered = 0
+            if flag == 1:
+                t = ts.timestamp()
+                if policy == "quiet-period":
+                    if last_alert is None or t - last_alert > cooldown_seconds:
+                        delivered = 1
+                    last_alert = t
+                else:
+                    if (
+                        last_delivered is None
+                        or t - last_delivered > cooldown_seconds
+                    ):
+                        delivered = 1
+                        last_delivered = t
+            rows.append((key[0], eid, ts, flag, delivered))
+        return (last_alert, last_delivered), rows
 
-    return (
-        flagged.withWatermark("ts", "2 hours")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            throttle,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
+    return _keyed_scan(
+        flagged,
+        ["user_id"],
+        "user_id bigint, event_id bigint, ts timestamp, "
+        f"{flag_col} int, alert_delivered int",
+        "last_alert double, last_delivered double",
+        (None, None),
+        ["ts", "event_id"],
+        scan,
+        timeout_minutes,
     )
 
 
@@ -1164,73 +933,40 @@ def streaming_kmv(
         raise ValueError(f"streaming_kmv: k must be >= 2, got {k}")
     if hash_fn not in _U_DIV:
         raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     keys = list(key_cols)
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in events.select(*keys).schema.fields
-    )
-    out_schema = (
-        f"{key_schema}, kmv array<bigint>, kmv_size int, kmv_est double"
-    )
-    state_schema = "mins array<bigint>"
     kk = int(k)
     u_off, u_div = _U_OFF[hash_fn], _U_DIV[hash_fn]
 
     # NULLs must be dropped BEFORE hashing, mirroring kmv_build's
     # isNotNull filter: xxhash64(NULL) is the seed 42 (never NULL), so
-    # the pd.isna guard downstream cannot catch it and a NULL value
-    # would inject hash 42 into the sketch, inflating below-k counts
-    # and breaking the documented array-equality with the batch build.
+    # no NULL guard downstream could catch it and a NULL value would
+    # inject hash 42 into the sketch, inflating below-k counts and
+    # breaking the documented array-equality with the batch build.
     keyed = events.filter(F.col(value_col).isNotNull()).select(
         *keys,
         ts_col,
         _kmv_hash(F.col(value_col), hash_fn).alias("__h"),
     )
 
-    def run(key, pdf_iter, state):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        mins = list(state.get[0]) if state.exists else []
-        seen = set(mins)
-        for pdf in pdf_iter:
-            for h in pdf["__h"]:
-                if h is not None and not pd.isna(h):
-                    seen.add(int(h))
-        mins = sorted(seen)[:kk]
-        state.update((mins,))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
+    def scan(key, state, cols):
+        mins = sorted(set(state[0]).union(cols["__h"]))[:kk]
         if len(mins) < kk:
             est = float(len(mins))
         else:
             # same IEEE sequence as operators.kmv.kmv_estimate
             est = (kk - 1) / ((float(mins[kk - 1]) + u_off) / u_div)
-        yield pd.DataFrame(
-            [(*key, mins, len(mins), est)],
-            columns=[*keys, "kmv", "kmv_size", "kmv_est"],
-        )
+        return (mins,), [(*key, mins, len(mins), est)]
 
-    return (
-        keyed.withWatermark(ts_col, "2 hours")
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            run,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
+    return _keyed_scan(
+        keyed,
+        keys,
+        f"{_ddl(events, keys)}, kmv array<bigint>, kmv_size int, kmv_est double",
+        "mins array<bigint>",
+        ([],),
+        [],
+        scan,
+        timeout_minutes,
+        ts_col,
     )
 
 
@@ -1261,9 +997,6 @@ def streaming_theta(
     ADVICE): the key portion of the output and state schemas is derived
     from the INPUT schema, so any key arity/type works.
     """
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     if not 0.0 < alpha < 1.0:
         raise ValueError(f"streaming_theta: alpha must be in (0,1), got {alpha}")
     if min_points < 3:
@@ -1273,97 +1006,59 @@ def streaming_theta(
     a = float(alpha)
     mp = int(min_points)
     keys = list(key_cols)
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in events.select(*keys).schema.fields
-    )
-    out_schema = (
-        f"{key_schema}, {ts_col} timestamp, {value_col} double, "
-        "theta_forecast double, abs_err double, theta_mae double"
-    )
-    state_schema = (
-        "cnt bigint, sx double, sy double, sxx double, sxy double, "
-        "ses double, err_sum double, err_n bigint"
-    )
 
-    def run(key, pdf_iter, state):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        if state.exists:
-            cnt, sx, sy, sxx, sxy, ses, err_sum, err_n = state.get
-        else:
-            cnt, sx, sy, sxx, sxy, ses, err_sum, err_n = (
-                0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0,
-            )
+    def scan(key, state, cols):
+        cnt, sx, sy, sxx, sxy, ses, err_sum, err_n = state
         rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(ts_col)
-            for _, r in pdf.iterrows():
-                yv = r[value_col]
-                if pd.isna(yv):
-                    raise ValueError(
-                        "streaming_theta: null values in series (fill first)"
-                    )
-                y_t = float(yv)
-                t = cnt
-                if cnt == 0:
-                    ses = y_t  # batch init: ses = y[0] BEFORE the loop
-                fc = None
-                err = None
-                if cnt >= mp:
-                    det = cnt * sxx - sx * sx
-                    if det > 0:
-                        b = (cnt * sxy - sx * sy) / det
-                        a0 = (sy - b * sx) / cnt
-                        line_t = a0 + b * t
-                        fc = 0.5 * (line_t + ses)
-                        err = abs(y_t - fc)
-                        err_sum += err
-                        err_n += 1
-                        z_t = 2.0 * y_t - line_t
-                    else:
-                        z_t = y_t
+        for ts, yv in zip(cols[ts_col], cols[value_col]):
+            if yv is None:
+                raise ValueError(
+                    "streaming_theta: null values in series (fill first)"
+                )
+            y_t = float(yv)
+            t = cnt
+            if cnt == 0:
+                ses = y_t  # batch init: ses = y[0] BEFORE the loop
+            fc = None
+            err = None
+            if cnt >= mp:
+                det = cnt * sxx - sx * sx
+                if det > 0:
+                    b = (cnt * sxy - sx * sy) / det
+                    a0 = (sy - b * sx) / cnt
+                    line_t = a0 + b * t
+                    fc = 0.5 * (line_t + ses)
+                    err = abs(y_t - fc)
+                    err_sum += err
+                    err_n += 1
+                    z_t = 2.0 * y_t - line_t
                 else:
                     z_t = y_t
-                ses = a * z_t + (1.0 - a) * ses
-                sx += t
-                sy += y_t
-                sxx += t * t
-                sxy += t * y_t
-                cnt += 1
-                rows.append(
-                    (*key, r[ts_col], y_t, fc, err,
-                     (err_sum / err_n) if err_n else None)
-                )
-        state.update((cnt, sx, sy, sxx, sxy, ses, err_sum, err_n))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                *keys, ts_col, value_col,
-                "theta_forecast", "abs_err", "theta_mae",
-            ],
-        )
+            else:
+                z_t = y_t
+            ses = a * z_t + (1.0 - a) * ses
+            sx += t
+            sy += y_t
+            sxx += t * t
+            sxy += t * y_t
+            cnt += 1
+            rows.append(
+                (*key, ts, y_t, fc, err, (err_sum / err_n) if err_n else None)
+            )
+        return (cnt, sx, sy, sxx, sxy, ses, err_sum, err_n), rows
 
-    return (
-        events.withWatermark(ts_col, "2 hours")
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            run,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
+    return _keyed_scan(
+        events,
+        keys,
+        f"{_ddl(events, keys)}, {ts_col} timestamp, {value_col} double, "
+        "theta_forecast double, abs_err double, theta_mae double",
+        "cnt bigint, sx double, sy double, sxx double, sxy double, "
+        "ses double, err_sum double, err_n bigint",
+        (0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0),
+        [ts_col],
+        scan,
+        timeout_minutes,
+        ts_col,
     )
 
 
@@ -1393,101 +1088,60 @@ def streaming_croston(
     ADVICE): the key portion of the output and state schemas is derived
     from the INPUT schema, so any key arity/type works.
     """
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     if not 0.0 < alpha < 1.0:
         raise ValueError(f"streaming_croston: alpha must be in (0,1), got {alpha}")
     a = float(alpha)
     factor = (1.0 - a / 2.0) if sba else 1.0
     keys = list(key_cols)
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in events.select(*keys).schema.fields
-    )
-    out_schema = (
-        f"{key_schema}, {ts_col} timestamp, {value_col} double, "
-        "croston_forecast double, abs_err double, croston_mae double"
-    )
-    state_schema = (
-        "z double, p double, has_z boolean, has_p boolean, "
-        "gap bigint, err_sum double, err_n bigint"
-    )
 
-    def run(key, pdf_iter, state):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        if state.exists:
-            z, p, has_z, has_p, gap, err_sum, err_n = state.get
-        else:
-            z, p, has_z, has_p, gap, err_sum, err_n = (
-                0.0, 0.0, False, False, 0, 0.0, 0,
-            )
+    def scan(key, state, cols):
+        z, p, has_z, has_p, gap, err_sum, err_n = state
         rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(ts_col)
-            for _, r in pdf.iterrows():
-                yv = r[value_col]
-                if pd.isna(yv):
-                    raise ValueError(
-                        "streaming_croston: null values in series (fill first)"
-                    )
-                y_t = float(yv)
-                if y_t < 0:
-                    raise ValueError("streaming_croston: negative demand")
-                fc = None
-                err = None
-                if has_z and has_p and p > 0:
-                    fc = factor * z / p
-                    err = abs(y_t - fc)
-                    err_sum += err
-                    err_n += 1
-                gap += 1
-                if y_t > 0:
-                    if not has_z:
-                        z = y_t  # first demand initializes the size
-                        has_z = True
-                    elif not has_p:
-                        p = float(gap)
-                        has_p = True
-                        z = a * y_t + (1.0 - a) * z
-                    else:
-                        z = a * y_t + (1.0 - a) * z
-                        p = a * gap + (1.0 - a) * p
-                    gap = 0
-                rows.append(
-                    (*key, r[ts_col], y_t, fc, err,
-                     (err_sum / err_n) if err_n else None)
+        for ts, yv in zip(cols[ts_col], cols[value_col]):
+            if yv is None:
+                raise ValueError(
+                    "streaming_croston: null values in series (fill first)"
                 )
-        state.update((z, p, has_z, has_p, gap, err_sum, err_n))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                *keys, ts_col, value_col,
-                "croston_forecast", "abs_err", "croston_mae",
-            ],
-        )
+            y_t = float(yv)
+            if y_t < 0:
+                raise ValueError("streaming_croston: negative demand")
+            fc = None
+            err = None
+            if has_z and has_p and p > 0:
+                fc = factor * z / p
+                err = abs(y_t - fc)
+                err_sum += err
+                err_n += 1
+            gap += 1
+            if y_t > 0:
+                if not has_z:
+                    z = y_t  # first demand initializes the size
+                    has_z = True
+                elif not has_p:
+                    p = float(gap)
+                    has_p = True
+                    z = a * y_t + (1.0 - a) * z
+                else:
+                    z = a * y_t + (1.0 - a) * z
+                    p = a * gap + (1.0 - a) * p
+                gap = 0
+            rows.append(
+                (*key, ts, y_t, fc, err, (err_sum / err_n) if err_n else None)
+            )
+        return (z, p, has_z, has_p, gap, err_sum, err_n), rows
 
-    return (
-        events.withWatermark(ts_col, "2 hours")
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            run,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
+    return _keyed_scan(
+        events,
+        keys,
+        f"{_ddl(events, keys)}, {ts_col} timestamp, {value_col} double, "
+        "croston_forecast double, abs_err double, croston_mae double",
+        "z double, p double, has_z boolean, has_p boolean, "
+        "gap bigint, err_sum double, err_n bigint",
+        (0.0, 0.0, False, False, 0, 0.0, 0),
+        [ts_col],
+        scan,
+        timeout_minutes,
+        ts_col,
     )
 
 
@@ -1551,64 +1205,30 @@ def streaming_transitions(
     CURRENT type is emitted as a transition to null and becomes the
     next row's (suppressed) predecessor.
     """
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     keys = list(session_cols)
     order = list(order_cols)
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in events.select(*keys).schema.fields
-    )
-    order_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in events.select(*order).schema.fields
-    )
-    out_schema = (
-        f"{key_schema}, {order_schema}, from_type string, to_type string"
-    )
-    state_schema = "has_last boolean, last_type string"
 
-    def walk(key, pdf_iter, state):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        has_last, last_type = state.get if state.exists else (False, None)
+    def scan(key, state, cols):
+        has_last, last_type = state
         rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(order)
-            for _, r in pdf.iterrows():
-                cur = r[type_col]
-                cur = None if pd.isna(cur) else str(cur)
-                if has_last and last_type is not None:
-                    rows.append(
-                        (*key, *(r[c] for c in order), last_type, cur)
-                    )
-                has_last, last_type = True, cur
-        state.update((has_last, last_type))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            rows, columns=[*keys, *order, "from_type", "to_type"]
-        )
+        for o, cur in zip(zip(*(cols[c] for c in order)), cols[type_col]):
+            cur = None if cur is None else str(cur)
+            if has_last and last_type is not None:
+                rows.append((*key, *o, last_type, cur))
+            has_last, last_type = True, cur
+        return (has_last, last_type), rows
 
-    return (
-        events.withWatermark(ts_col, "2 hours")
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            walk,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
+    return _keyed_scan(
+        events,
+        keys,
+        f"{_ddl(events, keys)}, {_ddl(events, order)}, "
+        "from_type string, to_type string",
+        "has_last boolean, last_type string",
+        (False, None),
+        order,
+        scan,
+        timeout_minutes,
+        ts_col,
     )
 
 
@@ -1646,9 +1266,6 @@ def streaming_attribution(
     conversion row that is also a touch credits later conversions but
     never itself, matching the strict-earlier frame.
     """
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     known = ("first", "last", "linear", "position", "decay")
     bad = [m for m in models if m not in known]
     if bad:
@@ -1661,15 +1278,6 @@ def streaming_attribution(
     model_list = list(models)
     touch_set = set(touch_types)
     conv_set = set(conversion_types)
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in events.select(*keys).schema.fields
-    )
-    out_schema = (
-        f"{key_schema}, {ts_col} timestamp, model string, "
-        "channel string, ppm bigint"
-    )
-    state_schema = "tus array<bigint>, chs array<string>"
 
     def credits_for(touches: list, cus: int) -> list:
         """(model, channel, ppm) rows for one conversion — the batch
@@ -1709,63 +1317,43 @@ def streaming_attribution(
                 )
         return out
 
-    def walk(key, pdf_iter, state):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        tus, chs = state.get if state.exists else ([], [])
-        touches = list(zip(list(tus), list(chs)))
+    def scan(key, state, cols):
+        touches = list(zip(*state))
         rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(ts_col, kind="mergesort")
-            for _, r in pdf.iterrows():
-                et = r[channel_col]
-                us = int(pd.Timestamp(r[ts_col]).value // 1000)
-                if et in conv_set:
-                    # prune on conversion arrival too: a user whose
-                    # traffic turns conversion-only must not retain
-                    # touches beyond the lookback indefinitely (the
-                    # state contract is pruned-on-ANY-arrival; safe —
-                    # entries below us - lookback are ineligible for
-                    # this and every future conversion)
-                    touches = [
-                        (t, c) for t, c in touches if t >= us - lookback_us
-                    ]
-                    for m, c, ppm in credits_for(touches, us):
-                        rows.append((*key, r[ts_col], m, c, ppm))
-                if et in touch_set:
-                    touches.append((us, str(et)))
-                    # prune: older than us - lookback can never credit
-                    # a future conversion (future cus >= us)
-                    touches = [
-                        (t, c) for t, c in touches if t >= us - lookback_us
-                    ]
-        state.update((
-            [t for t, _ in touches], [c for _, c in touches],
-        ))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            rows, columns=[*keys, ts_col, "model", "channel", "ppm"]
-        )
+        for ts, et in zip(cols[ts_col], cols[channel_col]):
+            us = ts.value // 1000
+            if et in conv_set:
+                # prune on conversion arrival too: a user whose
+                # traffic turns conversion-only must not retain
+                # touches beyond the lookback indefinitely (the
+                # state contract is pruned-on-ANY-arrival; safe —
+                # entries below us - lookback are ineligible for
+                # this and every future conversion)
+                touches = [
+                    (t, c) for t, c in touches if t >= us - lookback_us
+                ]
+                for m, c, ppm in credits_for(touches, us):
+                    rows.append((*key, ts, m, c, ppm))
+            if et in touch_set:
+                touches.append((us, str(et)))
+                # prune: older than us - lookback can never credit
+                # a future conversion (future cus >= us)
+                touches = [
+                    (t, c) for t, c in touches if t >= us - lookback_us
+                ]
+        return ([t for t, _ in touches], [c for _, c in touches]), rows
 
-    return (
-        events.withWatermark(ts_col, "2 hours")
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            walk,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
+    return _keyed_scan(
+        events,
+        keys,
+        f"{_ddl(events, keys)}, {ts_col} timestamp, model string, "
+        "channel string, ppm bigint",
+        "tus array<bigint>, chs array<string>",
+        ([], []),
+        [ts_col],
+        scan,
+        timeout_minutes,
+        ts_col,
     )
 
 
@@ -1814,9 +1402,6 @@ def streaming_funnel(
     ``timeout_minutes=None``; the default trades that guarantee for
     bounded state on funnels slower than the timeout.
     """
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     k = len(steps)
     if k < 1:
         raise ValueError("streaming_funnel: need at least one step")
@@ -1826,59 +1411,37 @@ def streaming_funnel(
         )
     keys = list(key_cols)
     step_list = [str(s) for s in steps]
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in events.select(*keys).schema.fields
-    )
-    out_schema = f"{key_schema}, {ts_col} timestamp, funnel_depth int"
-    state_schema = "done int, anchor bigint, last bigint"
 
-    def walk(key, pdf_iter, state):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        done, anchor, last = state.get if state.exists else (0, 0, 0)
+    def scan(key, state, cols):
+        done, anchor, last = state
         rows = []
-        for pdf in pdf_iter:
-            pdf = pdf[pdf[event_col].isin(step_list)]
-            pdf = pdf.sort_values([ts_col, event_col], kind="mergesort")
-            for _, r in pdf.iterrows():
-                if done >= k:
-                    break
-                us = int(pd.Timestamp(r[ts_col]).value // 1000)
-                ok = str(r[event_col]) == step_list[done] and (
-                    done == 0 or us > last
-                )
-                if within_us is not None and done > 0:
-                    ok = ok and us <= anchor + within_us
-                if ok:
-                    if done == 0:
-                        anchor = us
-                    done += 1
-                    last = us
-                    rows.append((*key, r[ts_col], done))
-        state.update((done, anchor, last))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(rows, columns=[*keys, ts_col, "funnel_depth"])
+        for ts, ev in zip(cols[ts_col], cols[event_col]):
+            if done >= k:
+                break
+            if ev not in step_list:
+                continue
+            us = ts.value // 1000
+            ok = ev == step_list[done] and (done == 0 or us > last)
+            if within_us is not None and done > 0:
+                ok = ok and us <= anchor + within_us
+            if ok:
+                if done == 0:
+                    anchor = us
+                done += 1
+                last = us
+                rows.append((*key, ts, done))
+        return (done, anchor, last), rows
 
-    return (
-        events.withWatermark(ts_col, "2 hours")
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            walk,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
+    return _keyed_scan(
+        events,
+        keys,
+        f"{_ddl(events, keys)}, {ts_col} timestamp, funnel_depth int",
+        "done int, anchor bigint, last bigint",
+        (0, 0, 0),
+        [ts_col, event_col],
+        scan,
+        timeout_minutes,
+        ts_col,
     )
 
 
@@ -1913,70 +1476,35 @@ def streaming_journey_paths(
     replay (asserted in the parity test), and share = cnt/total
     downstream.
     """
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     if k < 2:
         raise ValueError(f"streaming_journey_paths: k must be >= 2, got {k}")
     keys = list(session_cols)
     order = list(order_cols)
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in events.select(*keys).schema.fields
-    )
-    order_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in events.select(*order).schema.fields
-    )
-    out_schema = f"{key_schema}, {order_schema}, path string"
-    state_schema = "vals array<string>, nulls array<boolean>"
 
-    def walk(key, pdf_iter, state):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        vals, nulls = state.get if state.exists else ([], [])
-        prev = [
-            (None if isnull else v)
-            for v, isnull in zip(list(vals), list(nulls))
-        ]
+    def scan(key, state, cols):
+        vals, nulls = state
+        prev = [(None if isnull else v) for v, isnull in zip(vals, nulls)]
         rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(order)
-            for _, r in pdf.iterrows():
-                cur = r[type_col]
-                cur = None if pd.isna(cur) else str(cur)
-                run = prev + [cur]
-                if len(run) == k and all(t is not None for t in run):
-                    rows.append(
-                        (*key, *(r[c] for c in order), sep.join(run))
-                    )
-                prev = (prev + [cur])[-(k - 1):]
-        state.update((
-            ["" if t is None else t for t in prev],
-            [t is None for t in prev],
-        ))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(rows, columns=[*keys, *order, "path"])
+        for o, cur in zip(zip(*(cols[c] for c in order)), cols[type_col]):
+            cur = None if cur is None else str(cur)
+            run = prev + [cur]
+            if len(run) == k and all(t is not None for t in run):
+                rows.append((*key, *o, sep.join(run)))
+            prev = run[-(k - 1):]
+        return (
+            ["" if t is None else t for t in prev], [t is None for t in prev]
+        ), rows
 
-    return (
-        events.withWatermark(ts_col, "2 hours")
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            walk,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
+    return _keyed_scan(
+        events,
+        keys,
+        f"{_ddl(events, keys)}, {_ddl(events, order)}, path string",
+        "vals array<string>, nulls array<boolean>",
+        ([], []),
+        order,
+        scan,
+        timeout_minutes,
+        ts_col,
     )
 
 
@@ -2034,9 +1562,6 @@ def streaming_sax(
     """
     import math
 
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from amonaly_detection_in_time_series_data_spark.operators.sax import SAX_BREAKPOINTS
 
     if alphabet_size not in SAX_BREAKPOINTS:
@@ -2050,21 +1575,9 @@ def streaming_sax(
             f"divisible by word_len ({word_len})"
         )
     keys = list(series_cols)
-    order = [ts_col, *order_tiebreak]
     scale = 10 ** int(unit_digits)
     seg_rows = window_rows // word_len
     bps = [float(repr(b)) for b in SAX_BREAKPOINTS[alphabet_size]]
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in events.select(*keys).schema.fields
-    )
-    out_schema = (
-        f"{key_schema}, win bigint, win_start timestamp, word string"
-    )
-    state_schema = (
-        "win bigint, seen int, poisoned boolean, "
-        "xs array<bigint>, tss array<bigint>"
-    )
 
     def word_of(xs: list[int]) -> str:
         s_all = sum(xs)
@@ -2088,64 +1601,40 @@ def streaming_sax(
             out.append(c)
         return "".join(out)
 
-    def walk(key, pdf_iter, state):
+    def scan(key, state, cols):
         import pandas as pd
 
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        win, seen, poisoned, xs, tss = (
-            state.get if state.exists else (0, 0, False, [], [])
-        )
+        win, seen, poisoned, xs, tss = state
         xs, tss = list(xs), list(tss)
         rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(order, kind="mergesort")
-            for _, r in pdf.iterrows():
-                v = r[value_col]
-                seen += 1
-                if pd.isna(v):
-                    # batch row_number runs BEFORE the null filter: the
-                    # NULL keeps its position (poisons this window) and
-                    # window indices keep counting
-                    poisoned = True
-                else:
-                    xs.append(int(round(float(v) * scale)))
-                    tss.append(
-                        int(pd.Timestamp(r[ts_col]).value // 1000)
+        for ts, v in zip(cols[ts_col], cols[value_col]):
+            seen += 1
+            if v is None:
+                # batch row_number runs BEFORE the null filter: the
+                # NULL keeps its position (poisons this window) and
+                # window indices keep counting
+                poisoned = True
+            else:
+                xs.append(int(round(float(v) * scale)))
+                tss.append(ts.value // 1000)
+            if seen == window_rows:
+                if not poisoned:
+                    rows.append(
+                        (*key, win, pd.Timestamp(min(tss) * 1000), word_of(xs))
                     )
-                if seen == window_rows:
-                    if not poisoned:
-                        rows.append(
-                            (
-                                *key,
-                                win,
-                                pd.Timestamp(min(tss) * 1000),
-                                word_of(xs),
-                            )
-                        )
-                    win += 1
-                    seen, poisoned, xs, tss = 0, False, [], []
-        state.update((win, seen, poisoned, xs, tss))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            rows, columns=[*keys, "win", "win_start", "word"]
-        )
+                win += 1
+                seen, poisoned, xs, tss = 0, False, [], []
+        return (win, seen, poisoned, xs, tss), rows
 
-    return (
-        events.withWatermark(ts_col, "2 hours")
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            walk,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
+    return _keyed_scan(
+        events,
+        keys,
+        f"{_ddl(events, keys)}, win bigint, win_start timestamp, word string",
+        "win bigint, seen int, poisoned boolean, "
+        "xs array<bigint>, tss array<bigint>",
+        (0, 0, False, [], []),
+        [ts_col, *order_tiebreak],
+        scan,
+        timeout_minutes,
+        ts_col,
     )

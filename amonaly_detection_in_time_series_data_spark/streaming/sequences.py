@@ -8,13 +8,16 @@ L, emits the completed sequence tagged with its start timestamp —
 exactly the batch output when the stream is replayed in order.
 
 State is bounded (L values + timestamps per key), so this scales to any
-key cardinality; Arrow-batched ``applyInPandasWithState`` keeps the
-per-key work in pandas.
+key cardinality; it runs on the keyed-state driver of
+``streaming.rolling`` (ordering, NULL and idle-key eviction contract in
+that module's docstring).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+from .rolling import _keyed_scan
 
 
 def streaming_sequences(
@@ -29,54 +32,30 @@ def streaming_sequences(
     seq array<double>) — matching the batch ``create_sequences`` rows
     whose window is full.
     """
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    out_schema = (
-        "user_id bigint, start_ts timestamp, end_ts timestamp, "
-        "seq array<double>"
-    )
-    state_schema = "vals array<double>, tss array<timestamp>"
-
-    def assemble(key, pdf_iter, state):
-        import pandas as pd
-
-        (user_id,) = key
-        if state.exists:
-            vals, tss = list(state.get[0]), list(state.get[1])
-        else:
-            vals, tss = [], []
+    def scan(key, state, cols):
+        vals, tss = list(state[0]), list(state[1])
         out = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for _, r in pdf.iterrows():
-                v = r[value_col]
-                vals.append(float(v) if v is not None else None)
-                tss.append(r["ts"])
-                if len(vals) >= seq_len:
-                    vals = vals[-seq_len:]
-                    tss = tss[-seq_len:]
-                    out.append((user_id, tss[0], tss[-1], list(vals)))
+        for ts, v in zip(cols["ts"], cols[value_col]):
+            vals.append(float(v) if v is not None else None)
+            tss.append(ts)
+            if len(vals) >= seq_len:
+                vals = vals[-seq_len:]
+                tss = tss[-seq_len:]
+                out.append((key[0], tss[0], tss[-1], list(vals)))
         # Keep the last L-1 rows; for L=1 keep NOTHING — vals[-0:] is the
         # whole list, which would grow per-key state without bound.
         keep = seq_len - 1 if seq_len > 1 else 0
-        state.update((vals[-keep:] if keep else [], tss[-keep:] if keep else []))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(out, columns=["user_id", "start_ts", "end_ts", "seq"])
+        return (vals[-keep:] if keep else [], tss[-keep:] if keep else []), out
 
-    return (
-        events.withWatermark("ts", "2 hours")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            assemble,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
+    return _keyed_scan(
+        events,
+        ["user_id"],
+        "user_id bigint, start_ts timestamp, end_ts timestamp, "
+        "seq array<double>",
+        "vals array<double>, tss array<timestamp>",
+        ([], []),
+        ["ts", "event_id"],
+        scan,
+        timeout_minutes,
     )

@@ -255,46 +255,6 @@ class TestStreamingParity:
         for k, seq in expected.items():
             assert streamed[k] == pytest.approx(seq, rel=1e-9), k
 
-    def test_tws_sequences_match_batch(self, spark, sf_dir):
-        """transformWithStateInPandas variant agrees with the batch
-        window on full replay (same contract as the
-        applyInPandasWithState implementation). TWS workers need
-        google.protobuf, which this environment lacks — skip cleanly
-        there; the applyInPandasWithState tier is always tested."""
-        pytest.importorskip("google.protobuf.descriptor")
-        from amonaly_detection_in_time_series_data_spark.streaming.tws import (
-            streaming_sequences_tws,
-        )
-
-        stream = replay_events_stream(spark, sf_dir)
-        seqs = streaming_sequences_tws(stream, value_col="value", seq_len=8)
-        _run_stream_to_memory(seqs, "tws_seqs", "append")
-        streamed = {
-            (r["user_id"], r["end_ts"]): r["seq"]
-            for r in spark.sql("SELECT * FROM tws_seqs").collect()
-        }
-
-        ev = load_table(spark, sf_dir, "events")
-        from pyspark.sql import Window as W
-
-        w_end = (
-            W.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(0, 7)
-        )
-        batch = (
-            ev.select(
-                "user_id",
-                F.collect_list(F.col("value").cast("double")).over(w_end).alias("seq"),
-                F.last("ts").over(w_end).alias("end_ts"),
-            )
-            .filter(F.size("seq") == 8)
-        )
-        expected = {
-            (r["user_id"], r["end_ts"]): r["seq"] for r in batch.collect()
-        }
-        assert len(streamed) == len(expected) > 0
-        for k, seq in expected.items():
-            assert streamed[k] == pytest.approx(seq, rel=1e-9), k
-
     def test_streaming_dedup_matches_batch_distinct(self, spark, sf_dir):
         from amonaly_detection_in_time_series_data_spark.streaming.rolling import (
             streaming_dedup,
@@ -1874,3 +1834,104 @@ class TestStreamingSax:
             streaming_sax(ev, alphabet_size=17)
         with _pytest.raises(ValueError, match="divisible"):
             streaming_sax(ev, window_rows=10, word_len=4)
+
+
+class TestKeyedScanDriver:
+    """The keyed-state driver under every stateful twin, on live
+    streams: a NULL value reaches the twin as ``None`` and keeps its
+    place in the past-only row frame (batch parity, no NaN poisoning),
+    and a key's micro-batch is sorted as a whole even when Arrow splits
+    it into several chunks."""
+
+    SCHEMA = "user_id bigint, event_id bigint, ts timestamp, value double"
+
+    def _replay(self, spark, vals, tmp_path, name, reverse=False):
+        import datetime as dt
+
+        B = dt.datetime(2024, 1, 1)
+        rows = [
+            (1, i, B + dt.timedelta(hours=i), v) for i, v in enumerate(vals)
+        ]
+        df = spark.createDataFrame(rows[::-1] if reverse else rows, self.SCHEMA)
+        df.coalesce(1).write.parquet(str(tmp_path / name))
+        return df, spark.readStream.schema(self.SCHEMA).parquet(
+            str(tmp_path / name)
+        )
+
+    @staticmethod
+    def _by_event(rows, cols):
+        return {
+            r["event_id"]: tuple(
+                None if isinstance(r[c], float) and math.isnan(r[c]) else r[c]
+                for c in cols
+            )
+            for r in rows
+        }
+
+    @staticmethod
+    def _assert_same(got, want):
+        assert set(got) == set(want) and len(want) > 0
+        for eid, exp in want.items():
+            for e, g in zip(exp, got[eid]):
+                if e is None:
+                    assert g is None, eid
+                else:
+                    assert g == pytest.approx(e, rel=1e-9), eid
+
+    @pytest.mark.parametrize("twin", ["zscore", "ewma", "hampel"])
+    def test_null_keeps_its_frame_slot(self, spark, tmp_path, twin):
+        from amonaly_detection_in_time_series_data_spark.operators.anomaly import (
+            ewma_deviation,
+            hampel_flags,
+        )
+        from amonaly_detection_in_time_series_data_spark.streaming.rolling import (
+            streaming_ewma_deviation,
+            streaming_hampel_flags,
+        )
+
+        # the NULL sits inside the w=4 frame of each of rows 5-8, and
+        # row 8 is a spike every detector flags
+        vals = [10.0, 11.0, 9.0, None, 10.0, 11.0, 9.0, 100.0]
+        df, stream = self._replay(spark, vals, tmp_path, f"nulls_{twin}")
+        order = ["ts", "event_id"]
+        if twin == "zscore":
+            out = streaming_zscore_flags(stream, window_rows=4, timeout_minutes=None)
+            batch = rolling_zscore(df, "value", 4, ["user_id"], order)
+            cols, bcols = ["zscore", "is_anomaly"], ["value_zscore", "is_anomaly"]
+        elif twin == "ewma":
+            out = streaming_ewma_deviation(stream, window_rows=4, timeout_minutes=None)
+            batch = ewma_deviation(df, "value", 4, ["user_id"], order)
+            cols = bcols = ["ewma", "ewma_dev", "ewma_alarm"]
+        else:
+            out = streaming_hampel_flags(stream, window_rows=4, timeout_minutes=None)
+            batch = hampel_flags(df, "value", 4, ["user_id"], order, centered=False)
+            cols = bcols = ["hampel_median", "hampel_mad", "hampel_flag"]
+        name = f"null_slot_{twin}"
+        _run_stream_to_memory(out, name, "append")
+        got = self._by_event(
+            spark.sql(f"SELECT * FROM {name}").collect(), ["value", *cols]
+        )
+        want = self._by_event(batch.collect(), ["value", *bcols])
+        self._assert_same(got, want)
+        assert got[3][0] is None  # the NULL stays NULL, not NaN
+        assert got[7][-1] == 1  # the spike after the NULL is flagged
+
+    def test_key_sorted_across_arrow_chunks(self, spark, tmp_path):
+        # one 12-row key in one micro-batch, stored newest first and cut
+        # into 3-row Arrow chunks: each chunk alone is a wrong order
+        vals = [float((i * 37) % 11) for i in range(12)]
+        df, stream = self._replay(spark, vals, tmp_path, "chunks", reverse=True)
+        conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        old = spark.conf.get(conf)
+        spark.conf.set(conf, "3")
+        try:
+            out = streaming_zscore_flags(stream, window_rows=4, timeout_minutes=None)
+            _run_stream_to_memory(out, "chunked_z", "append")
+        finally:
+            spark.conf.set(conf, old)
+        got = self._by_event(
+            spark.sql("SELECT * FROM chunked_z").collect(), ["zscore", "is_anomaly"]
+        )
+        batch = rolling_zscore(df, "value", 4, ["user_id"], ["ts", "event_id"])
+        want = self._by_event(batch.collect(), ["value_zscore", "is_anomaly"])
+        self._assert_same(got, want)
