@@ -4,8 +4,9 @@
 Design: every window here uses the SAME WindowSpec family
 ``partitionBy(series).orderBy(ts, tiebreak)`` so Catalyst plans ONE
 exchange + ONE sort for the entire feature stage — lags, rolling aggs and
-ffill all ride the same shuffle. Verified via .explain in
-tests/test_plans.py.
+ffill all ride the same shuffle. Verified on the physical plan in
+tests/test_plan_hygiene.py::TestComposedTimeseriesLineage and, for the
+whole ``plans.anomaly_pipeline``, in tests/test_pipeline.py.
 
 Scale notes: the reference's data is a single global series, which would
 put the whole table in one window partition. The engine takes the series

@@ -13,9 +13,17 @@ Stage map (reference -> here):
 
 Crucial structural difference: the reference materializes a full pandas
 frame between every stage (>=8 copies); here the stages only extend ONE
-logical plan — Catalyst collapses the ~30 projections into a single
-whole-stage-codegen region over a single window exchange, and nothing
-executes until the caller acts on the result.
+logical plan, and nothing executes until the caller acts on the result.
+
+Plan contract: ONE exchange and ONE sort. The dedup window is
+partitioned by ``(user_id, ts)`` and every feature and z-score window
+by ``user_id``, so left alone Catalyst hashes the events twice (once per
+key set) and sorts twice. The events are therefore hashed once on the
+series key (``repartition("user_id")``) before the dedup: that
+partitioning clusters both key sets, and all the windows ask for the
+same order ``(user_id, ts, event_id)``, so the one sort after the one
+exchange serves every window. The rows are unchanged — the repartition
+only moves where the work happens (pinned by tests/test_pipeline.py).
 """
 
 from __future__ import annotations
@@ -48,7 +56,7 @@ def anomaly_pipeline(
     key = ["user_id"]
     order = ["ts", "event_id"]
 
-    events = load_table(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events").repartition(*key)
     deduped = dedup_keep_positional(events, key + ["ts"], arrival_col="event_id")
     filled = fill_zero(ffill(deduped, [target], key, order), [target])
     feats = featurize(

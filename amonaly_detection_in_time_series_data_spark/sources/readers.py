@@ -22,6 +22,9 @@ carry pushed filters/pruned columns (verified via .explain in tests).
 from __future__ import annotations
 
 import os
+import stat
+import threading
+from collections import OrderedDict
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -95,6 +98,60 @@ def _nanos_timestamp_cols(path: str) -> set[str]:
         return set()
 
 
+# Confs that steer Spark's parquet schema inference, so part of the
+# schema cache key: the same file infers differently under each.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+_SCHEMA_CACHE_SIZE = 64
+_schema_cache: OrderedDict = OrderedDict()
+_schema_lock = threading.Lock()
+
+
+def _parquet_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """Spark's own inferred schema of one parquet file, inferred once per
+    file identity and inference confs in this process.
+
+    ``spark.read.parquet`` runs a one-task schema-inference JOB on every
+    call (~100-130 ms in a warm session on a 4-core host), even for a
+    file that has not changed. A repeated read of the same file hands the
+    cached schema to ``spark.read.schema(...)`` instead, which plans the
+    same scan with no job. The cached value is what Spark inferred, so it
+    is exact by construction. The key is the absolute path, size,
+    mtime and inode plus the :data:`_INFERENCE_CONFS` values; at most
+    :data:`_SCHEMA_CACHE_SIZE` entries are kept (least recently used
+    evicted). Returns ``None`` for anything but an existing regular file
+    (directories, missing paths), whose callers read as before.
+    """
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    key = (
+        os.path.abspath(path),
+        st.st_size,
+        st.st_mtime_ns,
+        st.st_ino,
+        tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS),
+    )
+    with _schema_lock:
+        schema = _schema_cache.get(key)
+        if schema is not None:
+            _schema_cache.move_to_end(key)
+            return schema
+    schema = spark.read.parquet(path).schema
+    with _schema_lock:
+        _schema_cache[key] = schema
+        while len(_schema_cache) > _SCHEMA_CACHE_SIZE:
+            _schema_cache.popitem(last=False)
+    return schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata parquet table.
 
@@ -103,6 +160,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     TimestampType by integer-dividing to µs (truncation — matching how
     DuckDB/Spark both narrow ns). Session timezone is pinned UTC so the
     values equal the tz-naive pandas reference's.
+
+    Only the first read of a file in a process runs Spark's parquet
+    schema-inference job; later reads of the unchanged file reuse the
+    inferred schema (:func:`_parquet_schema`) and launch no job.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     ns_cols = _nanos_timestamp_cols(path)
@@ -115,7 +176,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         except Exception:
             pass  # conf removed/immutable -> fall through; read may still work
-    df = spark.read.parquet(path)
+    schema = _parquet_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
     for f in df.schema.fields:
         if f.name in ns_cols and isinstance(f.dataType, T.LongType):
             df = df.withColumn(

@@ -56,6 +56,8 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.readers import _parquet_schema
+
 
 def replay_table_stream(
     spark: SparkSession,
@@ -68,6 +70,8 @@ def replay_table_stream(
     The file stream source requires a directory, so the single parquet
     file is symlinked into a scratch dir. No type fixing — callers that
     need the events ns-timestamp rule use :func:`replay_events_stream`.
+    The file's schema is inferred once per process, as in
+    ``sources.readers.load_table``.
     """
     import tempfile
 
@@ -80,7 +84,7 @@ def replay_table_stream(
     if not os.path.exists(link):
         os.symlink(src, link)
 
-    schema = spark.read.parquet(src).schema
+    schema = _parquet_schema(spark, src) or spark.read.parquet(src).schema
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
